@@ -396,7 +396,7 @@ def triangle_counts(
     because every edge points INTO it. The (deg, id) total order rides
     a struct comparison; two self-joins on slim (src, dst, deg)
     triples; the oriented edge table is materialized once (same
-    checkpoint|persist|none hatch as the dedup operators).
+    checkpoint|none hatch as the dedup operators).
     """
     from pprl_spark.operators.dedup import _materialize
 
@@ -524,7 +524,7 @@ def pagerank(
     one entity is tiny), each iteration is one slim (node, contrib)
     shuffle — map-side-combined integer sums, text never moves — and
     the per-iteration frame is materialized through the same
-    checkpoint|persist|none hatch as the dedup operators, keeping
+    checkpoint|none hatch as the dedup operators, keeping
     lineage constant-depth. Undirected degree >= 1 by construction
     (every node arrives on an edge), so there are no dangling nodes.
     Overflow headroom: ``v <= scale`` (mass is conserved minus

@@ -702,7 +702,7 @@ def duplicated_spans(
     # frame feeds three consumers (the frequency agg, the position
     # semi-join, and the doc dim) — materialize once or the fold runs
     # three times (measured ~2x the whole operator at sf0.1); same
-    # checkpoint|persist|none hatch as the dedup operators
+    # checkpoint|none hatch as the dedup operators
     base = _materialize(
         docs.select(
             "doc_id",

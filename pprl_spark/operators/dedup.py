@@ -25,19 +25,14 @@ def _materialize(df: DataFrame, mode: str) -> DataFrame:
     ``"checkpoint"`` (default): eager ``localCheckpoint`` — fastest in a
     single-session run, but it DISCARDS lineage and pins non-replicated
     RDD blocks, so on a real cluster an executor loss permanently kills
-    downstream actions. ``"persist"``: recoverable cache — recompute on
-    block loss, the right mode for long cluster jobs (callers that want
-    reliable storage should instead write the operator's input as a stage
-    table, ``plans.pipeline``). ``"none"``: no boundary — only safe when
-    the caller has already materialized the input.
+    downstream actions. ``"none"``: no boundary — only safe when the
+    caller has already materialized the input.
     """
     if mode == "checkpoint":
         return df.localCheckpoint()
-    if mode == "persist":
-        return df.persist()
     if mode == "none":
         return df
-    raise ValueError(f"materialize must be checkpoint|persist|none, got {mode!r}")
+    raise ValueError(f"materialize must be checkpoint|none, got {mode!r}")
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

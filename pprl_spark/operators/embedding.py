@@ -60,6 +60,47 @@ def normalize_documents(df: DataFrame, config: EmbedderConfig) -> DataFrame:
     return out.drop("_fields")
 
 
+def bloom_encode(feature_lists, config: EmbedderConfig) -> dict[str, list]:
+    """Hash a batch of per-row feature lists into the Bloom-space columns.
+
+    The one Python hashing kernel: ``embed_documents`` calls it after its
+    per-field featurizing, and any other embed path (e.g. a precomputed
+    JVM feature array fed through ``mapInPandas``) calls it directly.
+    Returns ``bf_indices`` (salted SHA-256, one hash memo shared across
+    the batch), ``bf_bitmap``, ``mh_sig`` and ``collision_fraction``, one
+    list entry per input row.
+
+    The join-side bitmap and the MinHash signature are computed here,
+    once per document, rather than as JVM higher-order functions: those
+    are interpreted (never codegen'd) and can be re-evaluated per
+    consumer — see ``functions.hashing.pack_bitmap`` and
+    ``operators.blocking.minhash_signatures`` (bit-identical twins of the
+    JVM forms, pinned by tests).
+    """
+    from pprl_spark.functions.hashing import (
+        bloom_indices_with_collisions,
+        pack_bitmap,
+    )
+    from pprl_spark.operators.blocking import minhash_signatures
+
+    n_words = -(-(config.bf_size + config.offset) // 64)
+    memo: dict = {}
+    idx_out, coll_out = [], []
+    for feats in feature_lists:
+        idx, coll = bloom_indices_with_collisions(
+            feats, config.bf_size, config.num_hashes, config.offset, config.salt,
+            _memo=memo,
+        )
+        idx_out.append(idx)
+        coll_out.append(coll)
+    return {
+        "bf_indices": idx_out,
+        "bf_bitmap": [pack_bitmap(idx, n_words) for idx in idx_out],
+        "mh_sig": minhash_signatures(idx_out, config.minhash_perms),
+        "collision_fraction": coll_out,
+    }
+
+
 def embed_documents(
     df: DataFrame,
     config: EmbedderConfig,
@@ -88,15 +129,7 @@ def embed_documents(
 
     colspec = dict(config.colspec)
     ff_args = {k: dict(v) for k, v in config.ff_args.items()}
-    bf_size, num_hashes, offset, salt = (
-        config.bf_size,
-        config.num_hashes,
-        config.offset,
-        config.salt,
-    )
     in_fields = [f.name for f in df.schema.fields]
-    n_words = -(-(bf_size + offset) // 64)
-    mh_perms = config.minhash_perms
     out_schema = T.StructType(
         list(df.schema.fields)
         + [
@@ -110,11 +143,6 @@ def embed_documents(
 
     def kernel(batches):
         from pprl_spark.functions import tokens as TK
-        from pprl_spark.functions.hashing import (
-            bloom_indices_with_collisions,
-            pack_bitmap,
-        )
-        from pprl_spark.operators.blocking import minhash_signatures
 
         kernels = TK.FEATURE_KERNELS
         plan = []
@@ -127,40 +155,17 @@ def embed_documents(
             plan.append((field, kernels[ftype], kw))
 
         for pdf in batches:
-            memo: dict = {}
-            n = len(pdf)
-            feats_out, idx_out, bm_out, coll_out = [], [], [], []
+            feats_out = []
             cols = {field: pdf[field].to_numpy() for field, _, _ in plan}
-            for i in range(n):
+            for i in range(len(pdf)):
                 per_col = []
                 for field, kern, kw in plan:
                     v = cols[field][i]
                     if v is not None and not isinstance(v, str):
                         v = None if v != v else v  # NaN -> None
                     per_col.append(kern(v, **kw))
-                feats = TK.union_features(per_col)
-                idx, coll = bloom_indices_with_collisions(
-                    feats, bf_size, num_hashes, offset, salt, _memo=memo
-                )
-                feats_out.append(sorted(feats))
-                idx_out.append(idx)
-                # join-side bitmap computed ONCE here: the JVM
-                # higher-order-function form is interpreted (never
-                # codegen'd) and can be re-evaluated per consumer —
-                # see functions.hashing.pack_bitmap
-                bm_out.append(pack_bitmap(idx, n_words))
-                coll_out.append(coll)
-            yield pdf.assign(
-                features=feats_out,
-                bf_indices=idx_out,
-                bf_bitmap=bm_out,
-                # signature precomputed here (vectorized, bit-identical
-                # to the JVM fold) so add_block_keys never pays the
-                # interpreted higher-order minhash_col — same pattern as
-                # bf_bitmap above
-                mh_sig=minhash_signatures(idx_out, mh_perms),
-                collision_fraction=coll_out,
-            )
+                feats_out.append(sorted(TK.union_features(per_col)))
+            yield pdf.assign(features=feats_out, **bloom_encode(feats_out, config))
 
     emb = df.mapInPandas(kernel, out_schema)
     # identity-SCM norm fast path (embedder.py:137-139); guard empty rows

@@ -28,7 +28,12 @@ must share a token in their (small) rarest-token prefixes:
   Prefixes select the LOW-df tokens by construction, so join blocks
   are naturally small (the skew story: hub tokens like stopwords fall
   out of prefixes for all but the shortest docs).
-- length filter: min(n1,n2) >= t * max(n1,n2), else Jaccard < t.
+- length filter: one-sided ``n_i >= t * n_p`` on the index-side size
+  n_i and the probe-side size n_p, else Jaccard < t.  One side is
+  enough only because of the role condition: the index side is the
+  (n, id)-smaller record, so n_i = min(n1,n2) and n_p = max(n1,n2),
+  and the test is min >= t * max.  Without the role condition it
+  would also have to run with the roles swapped.
 - positional filter (PPJoin): a candidate generated at prefix
   positions (p1, p2) can overlap at most min(n1-p1, n2-p2) + 1; if
   that is below the required overlap ceil(t/(1+t) * (n1+n2)) the
@@ -71,9 +76,8 @@ def jaccard_join(
     (prefix pipeline on both sides of the self-join, token arrays on
     both sides of the verify join) to ONE: the tokenized base and the
     ranked prefix table are materialized and every join probes the
-    materialized frame.  Same checkpoint|persist|none escape hatch as
-    the dedup operators (persist for cluster callers that need
-    recoverable lineage, none when the caller already materialized).
+    materialized frame.  Same checkpoint|none escape hatch as the dedup
+    operators (none when the caller already materialized).
     """
     from pprl_spark.operators.dedup import _materialize
     frac = Fraction(str(threshold))

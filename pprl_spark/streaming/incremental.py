@@ -106,6 +106,15 @@ def delta_match(
     tests/test_streaming_delta.py pins this). Mutual-best ranking is the
     one step that cannot be incremental: a new document can steal an old
     document's best partner, so old matches may legitimately change.
+
+    Requires corpus and delta document ids to be disjoint (append-only
+    ingest); nothing checks it. If a delta id is also a corpus id, its
+    pairs can arrive from both ``prior_pairs`` and ``new_pairs``, so the
+    union holds two rows for one pair, and ``mutual_best_match`` needs
+    one row per pair. With ``self_linkage=True`` (the default) a matched
+    pair is then returned twice; with ``self_linkage=False`` the two rows
+    can each take rank 1 in a different window and the true match is
+    dropped. Neither raises an error.
     """
     cols = ["id1", "id2", "block_key_hash", "sim"]
     all_pairs = prior_pairs.select(*cols).unionByName(new_pairs.select(*cols))

@@ -10,6 +10,7 @@ num_hashes=1, thresholds from self-compare, abs_cutoff=0.2, Hungarian
 
 import itertools
 import random
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -226,43 +227,68 @@ def test_mutual_best_self_linkage_one_to_one(spark):
     assert len(tp_used) != len(set(tp_used))
 
 
-def test_mutual_best_strategies_identical(spark):
-    """The r6 "agg" strategy (lexicographic-max narrowing, no pair-table
-    exchange) must return exactly the window strategy's result — on ties,
-    on multi-column orderings, and in self-linkage mode."""
-    import random
+def _rank1_both_ways(rows, self_linkage, order_cols):
+    """Pure-Python mutual-best reference over (id1, id2, score, sim) rows:
+    each side's partner is the max under (order_cols DESC..., partner
+    ASC); a pair survives when both endpoints pick each other. In
+    self-linkage mode one document's best partner is ranked over both
+    orientations of its pairs."""
+    col = {"score": 2, "sim": 3}
 
+    def best_partners(edges):
+        # edges: (doc, partner, row) -> {doc: partner}
+        best = {}
+        for doc, partner, r in edges:
+            key = tuple(-r[col[c]] for c in order_cols) + (partner,)
+            if doc not in best or key < best[doc][0]:
+                best[doc] = (key, partner)
+        return {d: p for d, (_, p) in best.items()}
+
+    if self_linkage:
+        both = best_partners(
+            [(r[0], r[1], r) for r in rows] + [(r[1], r[0], r) for r in rows]
+        )
+        b1, b2 = both, both
+    else:
+        b1 = best_partners([(r[0], r[1], r) for r in rows])
+        b2 = best_partners([(r[1], r[0], r) for r in rows])
+    return Counter(r for r in rows if b1.get(r[0]) == r[1] and b2.get(r[1]) == r[0])
+
+
+def test_mutual_best_matches_reference(spark):
+    """The window ranking must return exactly the pure-Python
+    rank-1-both-ways reference — on ties, on multi-column orderings, and
+    in self-linkage mode — compared as multisets. Two-party rows use
+    disjoint a*/b* namespaces; self-linkage rows share one namespace
+    (id1 < id2), so a document can be ranked from either column."""
     rng = random.Random(7)
-    rows = []
-    seen = set()
-    for _ in range(400):
-        i, j = rng.randrange(40), rng.randrange(40, 80)
-        if (i, j) in seen:
-            continue
-        seen.add((i, j))
-        # coarse score (forces ties) + fine score
-        rows.append((f"a{i}", f"b{j}", float(rng.randrange(4)), rng.random()))
-    cand = spark.createDataFrame(
-        rows, "id1 string, id2 string, score double, sim double"
+
+    def draw(pair):
+        rows, seen = [], set()
+        for _ in range(400):
+            i, j = pair()
+            if i == j or (i, j) in seen:
+                continue
+            seen.add((i, j))
+            # coarse score (forces ties) + fine score
+            rows.append((i, j, float(rng.randrange(4)), rng.random()))
+        return rows
+
+    two_party = draw(lambda: (f"a{rng.randrange(40)}", f"b{rng.randrange(40)}"))
+    one_table = draw(
+        lambda: tuple(sorted((f"d{rng.randrange(60):02d}", f"d{rng.randrange(60):02d}")))
     )
-    for self_linkage in (False, True):
+    for self_linkage, rows in ((False, two_party), (True, two_party), (True, one_table)):
+        cand = spark.createDataFrame(
+            rows, "id1 string, id2 string, score double, sim double"
+        )
         for order_cols in (("sim",), ("score", "sim")):
-            w = {
+            got = Counter(
                 tuple(r)
                 for r in mutual_best_match(
-                    cand,
-                    self_linkage=self_linkage,
-                    order_cols=order_cols,
-                    strategy="window",
+                    cand, self_linkage=self_linkage, order_cols=order_cols
                 ).collect()
-            }
-            a = {
-                tuple(r)
-                for r in mutual_best_match(
-                    cand,
-                    self_linkage=self_linkage,
-                    order_cols=order_cols,
-                    strategy="agg",
-                ).collect()
-            }
-            assert w == a, (self_linkage, order_cols)
+            )
+            want = _rank1_both_ways(rows, self_linkage, order_cols)
+            assert want, (self_linkage, order_cols)
+            assert got == want, (self_linkage, order_cols)

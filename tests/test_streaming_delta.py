@@ -13,6 +13,8 @@ from-scratch batch match over the full corpus.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,11 +43,12 @@ def split_blocks(spark):
     return cfg, corpus, delta, blocks
 
 
-def _pairs_set(df):
-    return {
+def _pairs(df):
+    """(id1, id2, sim) rows as a multiset: a duplicated pair row shows."""
+    return Counter(
         (r["id1"], r["id2"], round(r["sim"], 9))
         for r in df.select("id1", "id2", "sim").collect()
-    }
+    )
 
 
 def test_delta_candidates_union_equivalence(split_blocks):
@@ -53,9 +56,15 @@ def test_delta_candidates_union_equivalence(split_blocks):
     batch = generate_candidates(union, None, cfg, cap=False)
     prior = generate_candidates(corpus, None, cfg, cap=False)
     new = delta_candidates(corpus, delta, cfg, cap=False)
-    assert _pairs_set(batch) == _pairs_set(prior) | _pairs_set(new)
+    assert _pairs(batch) == _pairs(prior) + _pairs(new)
+    # one row per pair: the union of the cross and within frames is not
+    # deduped, so a pair emitted by both would show up here
+    n = new.agg(
+        F.count("*").alias("n"), F.countDistinct("id1", "id2").alias("d")
+    ).first()
+    assert n["n"] == n["d"]
     # the delta really contributes pairs (the split is not degenerate)
-    assert _pairs_set(new)
+    assert n["n"] > 0
 
 
 def test_delta_match_equals_batch_match(split_blocks):
@@ -66,7 +75,7 @@ def test_delta_match_equals_batch_match(split_blocks):
     prior = generate_candidates(corpus, None, cfg, cap=False).localCheckpoint()
     new = delta_candidates(corpus, delta, cfg, cap=False).localCheckpoint()
     inc_matches = delta_match(prior, new)
-    assert _pairs_set(batch_matches) == _pairs_set(inc_matches)
+    assert _pairs(batch_matches) == _pairs(inc_matches)
     assert inc_matches.count() > 0
 
 

@@ -40,62 +40,70 @@ def norm_cell(v):
     return v
 
 
-def run(sf_dir: str, only: list[str]) -> int:
-    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per parquet table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
-    qs = entry.queries()
+
+def sorted_rows(sdf) -> tuple[list[str], list[tuple]]:
+    """(sorted column names, sorted rounded rows) of a Spark DataFrame."""
+    cols = sorted(sdf.columns)
+    return cols, sorted(tuple(norm_cell(r[c]) for c in cols) for r in sdf.collect())
+
+
+def compare_query(spark, con, sf_dir: str, fn, sql: str | None) -> tuple[str, str]:
+    """Run one query on Spark and its oracle SQL on DuckDB.
+
+    Returns ``(status, detail)``: ``PASS`` when column names, row count
+    and order-insensitive rounded values agree, ``OK?`` when there is no
+    oracle (rows-only), ``FAIL`` otherwise.
+    """
+    try:
+        scols, srows = sorted_rows(fn(spark, sf_dir))
+    except Exception as e:
+        return "FAIL", f"spark error: {e}"
+    if sql is None:
+        return "OK?", f"rows={len(srows)} (no oracle — rows-only check)"
+    try:
+        ddf = con.sql(sql).fetchdf()
+    except Exception as e:
+        return "FAIL", f"duckdb error: {e}"
+    dcols = sorted(ddf.columns)
+    drows = sorted(
+        tuple(norm_cell(v) for v in row)
+        for row in ddf[dcols].itertuples(index=False, name=None)
+    )
+    if scols != dcols:
+        return "FAIL", f"columns {scols} vs {dcols}"
+    if len(srows) != len(drows):
+        return "FAIL", (
+            f"rowcount {len(srows)} vs {len(drows)}\n"
+            f"  spark head: {srows[:3]}\n  duck  head: {drows[:3]}"
+        )
+    bad = [(a, b) for a, b in zip(srows, drows) if a != b]
+    if bad:
+        return "FAIL", f"{len(bad)} mismatched rows; first: {bad[0]}"
+    return "PASS", f"rows={len(srows)}"
+
+
+def run(sf_dir: str, only: list[str]) -> int:
+    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+    con = duck_views(sf_dir)
     oracles = entry.oracle_sql()
     failures = 0
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    for name, fn in qs.items():
+    for name, fn in entry.queries().items():
         if only and name not in only:
             continue
         if name in FIXTURE_SCOPED and sf_tag != "sf0.01":
             print(f"SKIP {name}: golden fixture is sf0.01-scoped")
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sorted(sdf.columns)
-            srows = sorted(
-                tuple(norm_cell(r[c]) for c in scols) for r in sdf.collect()
-            )
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"OK?  {name}: rows={len(srows)} (no oracle — rows-only check)")
-            continue
-        try:
-            ddf = con.sql(oracles[name]).fetchdf()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures += 1
-            continue
-        dcols = sorted(ddf.columns)
-        drows = sorted(
-            tuple(norm_cell(v) for v in row)
-            for row in ddf[dcols].itertuples(index=False, name=None)
-        )
-        if scols != dcols:
-            print(f"FAIL {name}: columns {scols} vs {dcols}")
-            failures += 1
-            continue
-        if len(srows) != len(drows):
-            print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}")
-            print("  spark head:", srows[:3])
-            print("  duck  head:", drows[:3])
-            failures += 1
-            continue
-        bad = [(a, b) for a, b in zip(srows, drows) if a != b]
-        if bad:
-            print(f"FAIL {name}: {len(bad)} mismatched rows; first: {bad[0]}")
-            failures += 1
-            continue
-        print(f"PASS {name}: rows={len(srows)}")
+        status, detail = compare_query(spark, con, sf_dir, fn, oracles.get(name))
+        print(f"{status:<4} {name}: {detail}")
+        failures += status == "FAIL"
     spark.stop()
     return failures
 
